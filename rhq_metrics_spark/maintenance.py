@@ -18,6 +18,24 @@ first-class, testable object:
   compacted (the TempDataCompressor cadence, driven by event time so
   tests and replays behave deterministically).
 - :meth:`MaintenanceRunner.run_loop` — the wall-clock cron loop.
+
+A pass costs Spark work only where there is work.  Its budget, in
+queries (Spark actions; AQE runs each shuffle stage of a query as a job
+of its own):
+
+- compaction: one per metric type with closed hot slices, plus one
+  re-publishing the open-slice rows of segments that straddle the close;
+- per configured sink with newly compacted slices: one write that reads
+  only those slices, and the sink's serving-watermark refresh;
+- one retention-bounds aggregate over the definition tables, skipped
+  while they are unchanged;
+- one rewrite per metric type holding slices older than its shortest
+  retention (a type without data costs a listing);
+- one expiration-index write per metric type whose points changed since
+  its last refresh.
+
+The report's ``skipped`` entry says, per metric type, which of
+retention and the expiration refresh were skipped and why.
 """
 
 from __future__ import annotations
@@ -145,7 +163,9 @@ class MaintenanceRunner:
     def run_once(self, now_ms: int) -> dict:
         """Compact everything closed as of ``now_ms`` (minus grace), apply
         retention policies, refresh the persisted expiration index.
-        Returns a report dict per job."""
+        Returns a report dict per job; ``skipped`` maps each metric type
+        to ``{"retention": None | "empty", "expiration": None |
+        "unchanged"}``."""
         compacted = self.service.compact(now_ms - self.compaction_grace_ms)
         stats_slices = self._emit_stats_partials(compacted)
         hist_slices = self._emit_histogram_partials(compacted)
@@ -161,6 +181,13 @@ class MaintenanceRunner:
             t: self.service.store.refresh_expiration_index(t)
             for t in MetricType.USER_WRITABLE
         }
+        skipped = {
+            t: {
+                "retention": retention[t]["skipped"],
+                "expiration": expiration[t]["skipped"],
+            }
+            for t in MetricType.USER_WRITABLE
+        }
         ivf = self._maintain_ivf()
         bm25 = self._maintain_bm25()
         return {
@@ -173,7 +200,8 @@ class MaintenanceRunner:
             "seasonal_slices": seasonal_slices,
             "activity_slices": activity_slices,
             "retention": retention,
-            "expiration_rows": expiration,
+            "expiration_rows": {t: e["rows"] for t, e in expiration.items()},
+            "skipped": skipped,
             "ivf": ivf,
             "bm25": bm25,
         }
@@ -525,9 +553,10 @@ class MaintenanceRunner:
         build_fn, attach_fn,
     ) -> int:
         """Shared partial-sink emitter: recompute the just-compacted
-        slices' partials from the freshly-compacted COLD data (pruned
-        scan bounded to those slices) and write them with PER-SLICE
-        DYNAMIC PARTITION OVERWRITE — a slice that re-compacts after
+        slices' partials from the freshly-compacted COLD data (a
+        ``date_slice``-pruned read of only those slices: the cost follows
+        the slices, not the store's history) and write them with
+        PER-SLICE DYNAMIC PARTITION OVERWRITE — a slice that re-compacts after
         late-arriving points (store._compact_manifest merges hot into
         existing cold and returns the slice again) REPLACES its previous
         partial rows instead of double-appending, which would silently
@@ -537,14 +566,9 @@ class MaintenanceRunner:
         slices = [int(x) for x in (compacted.get(mt) or [])]
         if not slices:
             return 0
-        import pyspark.sql.functions as F
-
         store = self.service.store
-        pts = store.points(mt).filter(
-            (F.floor(F.col("ts") / store.slice_ms) * store.slice_ms).isin(slices)
-        )
         (
-            build_fn(pts, store, cfg)
+            build_fn(store.points(mt, slices=slices), store, cfg)
             .write.partitionBy("slice_start")
             .option("partitionOverwriteMode", "dynamic")
             .mode("overwrite")

@@ -104,6 +104,9 @@ class MetricsService:
         # (metric_type, tenant, slice-floor); entries self-invalidate
         # against store.state_token.
         self._tail_cache: dict = {}
+        # (key, {type: (longest, shortest)} retention days) — see
+        # _retention_bounds; keyed by store.definitions_token()
+        self._retention_bounds_cache: tuple | None = None
         # Served-plan execution session + view bindings (see
         # _serving_spark / _bind_served_view): the one-SQL routed paths
         # execute on a cloned session with AQE off — AQE's per-exchange
@@ -2892,60 +2895,101 @@ FROM (
         :1058-1063 + retentions_idx): per series, retention = metric
         override > tenant per-type retention > default.  Whole slices
         older than every policy drop at partition level; the remainder is
-        a row-level rewrite of only the affected slices."""
-        idx = self.store.metrics_idx()
-        tenants = self.store.tenants()
+        a row-level rewrite of only the affected slices.
+
+        Spark jobs run only for work that exists: a type with no data is
+        skipped on a listing (``"skipped": "empty"``); each type's
+        longest and shortest resolved retention come from ONE grouped
+        aggregate over the definition tables, cached until they change;
+        and with those bounds the store rewrites only slices that can
+        hold expiring rows."""
         day = 86_400_000
+        # read before the tables it keys: a concurrent definitions write
+        # can then only make the cached bounds look stale, never fresh
+        defs_token = self.store.definitions_token()
+        resolved = self._resolved_retentions(default_days)
+        bounds = None
         out: dict[str, dict] = {}
         for mtype in MetricType.USER_WRITABLE:
-            retentions = None
-            if idx is not None:
-                retentions = idx.filter(F.col("type") == mtype).select(
-                    "tenant_id", "metric", F.col("data_retention").alias("_metric_days")
-                )
-            if tenants is not None:
-                tr = tenants.select(
-                    F.col("id").alias("tenant_id"),
-                    F.col("retentions")[mtype].alias("_tenant_days"),
-                )
-                retentions = (
-                    retentions.join(tr, "tenant_id", "left")
-                    if retentions is not None
-                    else None
-                )
-            if retentions is None:
+            dropped, rewritten, skipped = [], 0, None
+            if not self.store.hot_slices(mtype) and not self.store.cold_slices(mtype):
+                skipped = "empty"
+            elif resolved is None:
                 dropped = self.store.apply_retention(
                     mtype, now_ms - default_days * day
                 )
-                out[mtype] = {"dropped_slices": dropped, "rewritten": 0}
-                continue
-            cutoffs = retentions.select(
-                "tenant_id",
-                "metric",
-                (
-                    F.lit(now_ms)
-                    - F.coalesce(
-                        F.col("_metric_days"),
-                        F.col("_tenant_days") if tenants is not None else F.lit(None),
-                        F.lit(default_days),
+            else:
+                if bounds is None:
+                    bounds = self._retention_bounds(
+                        resolved, defs_token, default_days
                     )
-                    * day
-                ).alias("cutoff_ms"),
-            )
-            max_days_row = retentions.agg(
-                F.max("_metric_days"),
-                F.max("_tenant_days") if tenants is not None else F.lit(None),
-            ).collect()[0]
-            max_days = max(
-                default_days,
-                *(int(v) for v in max_days_row if v is not None),
-            ) if any(v is not None for v in max_days_row) else default_days
-            dropped = self.store.apply_retention(mtype, now_ms - max_days * day)
-            rewritten = self.store.apply_row_retention(
-                mtype, cutoffs, now_ms - default_days * day
-            )
-            out[mtype] = {"dropped_slices": dropped, "rewritten": rewritten}
+                longest, shortest = bounds.get(mtype, (default_days, default_days))
+                cutoffs = resolved.filter(F.col("type") == mtype).select(
+                    "tenant_id",
+                    "metric",
+                    (F.lit(now_ms) - F.col("days") * day).alias("cutoff_ms"),
+                )
+                dropped = self.store.apply_retention(mtype, now_ms - longest * day)
+                rewritten = self.store.apply_row_retention(
+                    mtype,
+                    cutoffs,
+                    now_ms - default_days * day,
+                    max_cutoff_ms=now_ms - shortest * day,
+                )
+            out[mtype] = {
+                "dropped_slices": dropped,
+                "rewritten": rewritten,
+                "skipped": skipped,
+            }
         return out
+
+    def _resolved_retentions(self, default_days: int) -> DataFrame | None:
+        """``(tenant_id, type, metric, days)``: every defined series'
+        retention, metric override > tenant per-type retention >
+        ``default_days``.  None without metric definitions — then every
+        series keeps the default."""
+        idx = self.store.metrics_idx()
+        if idx is None:
+            return None
+        days = [F.col("data_retention")]
+        tenants = self.store.tenants()
+        if tenants is not None:
+            idx = idx.join(
+                tenants.select(F.col("id").alias("tenant_id"), "retentions"),
+                "tenant_id",
+                "left",
+            )
+            days.append(F.col("retentions")[F.col("type")])
+        return idx.select(
+            "tenant_id",
+            "type",
+            "metric",
+            F.coalesce(*days, F.lit(default_days).cast("long")).alias("days"),
+        )
+
+    def _retention_bounds(
+        self, resolved: DataFrame, defs_token, default_days: int
+    ) -> dict[str, tuple[int, int]]:
+        """``{type: (longest, shortest)}`` retention days over the
+        resolved definitions and the default (series without a
+        definition keep it): one grouped aggregate for all types,
+        recomputed only when ``defs_token`` (the store's
+        ``definitions_token``) changes."""
+        key = (defs_token, default_days)
+        cached = self._retention_bounds_cache
+        if cached is not None and cached[0] == key:
+            return cached[1]
+        rows = (
+            resolved.groupBy("type")
+            .agg(F.max("days").alias("hi"), F.min("days").alias("lo"))
+            .collect()
+        )
+        bounds = {
+            r["type"]: (max(default_days, r["hi"]), min(default_days, r["lo"]))
+            for r in rows
+        }
+        self._retention_bounds_cache = (key, bounds)
+        return bounds
 
     def delete_tenant(self, tenant_id: str) -> None:
         self.store.delete_tenant(tenant_id)

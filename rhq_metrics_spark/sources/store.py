@@ -70,6 +70,7 @@ from __future__ import annotations
 
 import contextlib
 import fcntl
+import hashlib
 import json
 import os
 import shutil
@@ -94,6 +95,10 @@ from rhq_metrics_spark.sources.manifest import ManifestLog, new_id
 
 _LAYERS = ("hot", "cold")
 SEG_SIDECAR = "_slices.json"
+#: side-table sidecar: the rows written and, for derived tables, the
+#: points state token they were derived from (underscore prefix →
+#: invisible to Spark file listing)
+TABLE_STATE = "_state.json"
 
 # -- pure-Python XXH64 (public algorithm; github.com/Cyan4973/xxHash spec) --
 # Matches Spark's ``xxhash64`` expression on string input (UTF-8 bytes,
@@ -705,29 +710,48 @@ class MetricsStore:
         return df.unionByName(clean) if clean is not None else df
 
     def state_token(self, metric_type: str):
-        """Cheap, hashable token that changes whenever a read of
-        ``metric_type`` could see different data — for callers that pin
-        a constructed DataFrame across requests (the service's hybrid
-        tail base).  One glob + one stat in rename mode (the same
-        listing cost a single uncached read pays anyway), the manifest
-        version in manifest mode."""
+        """Cheap, hashable, JSON-serializable token that changes whenever
+        a read of ``metric_type`` could see different data — for callers
+        that pin a constructed DataFrame across requests (the service's
+        hybrid tail base) or persist what they derived from the points
+        (the expiration index).  One glob + one stat in rename mode (the
+        same listing cost a single uncached read pays anyway); in
+        manifest mode a digest of the type's manifest entry, whose
+        segment and version dirs are immutable — commits that touch
+        other types or side tables leave it unchanged."""
         if self.manifest is not None:
-            snap = self._read_snap()
-            return ("m", id(snap) if self._read_pin is not None
-                    else self.manifest.current()[0])
+            entry = self._read_snap().get("points", {}).get(metric_type, {})
+            digest = hashlib.sha1(
+                json.dumps(entry, sort_keys=True).encode()
+            ).hexdigest()
+            return ("m", digest)
         segs = tuple(s.name for s in self._hot_segments(metric_type))
         path = self._points_path(metric_type, "cold")
         mtime = path.stat().st_mtime_ns if path.exists() else 0
         return (segs, mtime)
 
-    def points(self, metric_type: str, dedup: bool = True) -> DataFrame:
-        """Unified hot ∪ cold view with last-write-wins per (tenant, metric, ts)."""
+    def points(
+        self, metric_type: str, dedup: bool = True, slices=None
+    ) -> DataFrame:
+        """Unified hot ∪ cold view with last-write-wins per (tenant, metric, ts).
+
+        ``slices`` (slice starts) restricts the view to those slices with
+        a ``date_slice`` predicate on each layer before the LWW window,
+        so it prunes cold partitions, hot segments and manifest entries:
+        the cost follows the slices read, not the store's history."""
+        prune = None
+        if slices is not None:
+            slices = sorted(int(x) for x in slices)
+
+            def prune(df: DataFrame) -> DataFrame:
+                return df.filter(F.col("date_slice").isin(slices))
+
         if not dedup:
             layers = [
-                lyr
+                prune(lyr) if prune is not None else lyr
                 for lyr in (
-                    self._read_layer(metric_type, "hot"),
-                    self._read_layer(metric_type, "cold"),
+                    self._read_layer(metric_type, "hot", slices=slices),
+                    self._read_layer(metric_type, "cold", slices=slices),
                 )
                 if lyr is not None
             ]
@@ -737,7 +761,7 @@ class MetricsStore:
             for other in layers[1:]:
                 df = df.unionByName(other)
             return df.select("tenant_id", "metric", "ts", "value", "tags")
-        merged = self._merged_lww(metric_type)
+        merged = self._merged_lww(metric_type, prune, slices=slices)
         if merged is None:
             return local_df(self.spark, [], SCHEMAS[metric_type])
         return merged.select("tenant_id", "metric", "ts", "value", "tags")
@@ -829,11 +853,13 @@ class MetricsStore:
         dst.parent.mkdir(parents=True, exist_ok=True)
         os.rename(src, dst)
         shutil.rmtree(trash, ignore_errors=True)
-        # Bump every ancestor's mtime up to the store base: a swap two
-        # levels down (date_slice=X/tenant_bucket=Y) doesn't touch the
-        # layer root, but the mtime-keyed plan cache (_read_layer) keys
-        # cold scans on exactly that root.
-        p = dst.parent
+        self._bump_mtimes(dst.parent)
+
+    def _bump_mtimes(self, p: Path) -> None:
+        """Bump every mtime from ``p`` up to the store base: a change two
+        levels down (date_slice=X/tenant_bucket=Y) doesn't touch the
+        layer root, but the mtime-keyed plan cache (_read_layer) and
+        :meth:`state_token` key cold scans on exactly that root."""
         base = self.base.resolve()
         for _ in range(8):
             try:
@@ -872,6 +898,37 @@ class MetricsStore:
             int(p.name.split("=", 1)[1])
             for p in path.iterdir()
             if p.is_dir() and p.name.startswith("date_slice=")
+        )
+
+    def _write_cold(self, df: DataFrame, staging: Path) -> None:
+        """The one cold-layout writer, used by compaction and by every
+        cold-slice rewrite: one file per (slice, bucket), sorted by
+        (metric, ts) so row-group min/max prunes metric and time
+        predicates, ZSTD with v2 data pages (DELTA_BINARY_PACKED on the
+        sorted ts column, the Gorilla delta-of-delta axis — ~10% smaller
+        cold files).  Rename mode partitions ``staging`` into
+        ``date_slice=/tenant_bucket=`` dirs; manifest mode into
+        ``_ds=/_tb=`` dirs that keep ``date_slice``/``tenant_bucket`` as
+        data columns (its version dirs are read by explicit path).
+
+        The partition columns lead the sort: a partitioned write orders
+        each task's rows by them first, and a sort that does not start
+        with them is replaced by one that does, losing (metric, ts)."""
+        if self.manifest is not None:
+            df = df.withColumn("_ds", F.col("date_slice")).withColumn(
+                "_tb", F.col("tenant_bucket")
+            )
+            parts = ("_ds", "_tb")
+        else:
+            parts = ("date_slice", "tenant_bucket")
+        (
+            df.repartition(*parts)
+            .sortWithinPartitions(*parts, "metric", "ts")
+            .write.mode("overwrite")
+            .option("compression", "zstd")
+            .option("parquet.writer.version", "v2")
+            .partitionBy(*parts)
+            .parquet(str(staging))
         )
 
     def compact(self, metric_type: str, closed_before_ms: int) -> list[int]:
@@ -922,17 +979,7 @@ class MetricsStore:
             )
         )
         staging = self.base / "_staging" / new_id("compact")
-        (
-            compacted.withColumn("_ds", F.col("date_slice"))
-            .withColumn("_tb", F.col("tenant_bucket"))
-            .repartition("_ds", "_tb")
-            .sortWithinPartitions("metric", "ts")
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            .option("parquet.writer.version", "v2")
-            .partitionBy("_ds", "_tb")
-            .parquet(str(staging))
-        )
+        self._write_cold(compacted, staging)
         cold_root = self._points_path(metric_type, "cold")
         vmap: dict[int, str] = {}
         for slice_start in closed:
@@ -1022,17 +1069,7 @@ class MetricsStore:
             )
         )
         staging = self.base / "_staging" / f"{metric_type}_compact"
-        (
-            compacted.repartition("date_slice", "tenant_bucket")
-            .sortWithinPartitions("metric", "ts")
-            .write.mode("overwrite")
-            .option("compression", "zstd")
-            # v2 data pages: DELTA_BINARY_PACKED on the sorted ts column
-            # (the Gorilla delta-of-delta axis) — ~10% smaller cold files
-            .option("parquet.writer.version", "v2")
-            .partitionBy("date_slice", "tenant_bucket")
-            .parquet(str(staging))
-        )
+        self._write_cold(compacted, staging)
         cold_root = self._points_path(metric_type, "cold")
         cold_root.mkdir(parents=True, exist_ok=True)
         done = []
@@ -1141,17 +1178,25 @@ class MetricsStore:
         metric_type: str,
         cutoffs: DataFrame,
         default_cutoff_ms: int,
+        max_cutoff_ms: int | None = None,
     ) -> int:
         """B6 with per-metric TTLs: ``cutoffs`` is a small frame
         ``(tenant_id, metric, cutoff_ms)``; rows older than their series'
         cutoff (or ``default_cutoff_ms``) are removed by rewriting only
         the slices that can contain them.  Whole-slice drops should be
         done first via :meth:`apply_retention` (cheaper).  Returns the
-        number of rewritten slice partitions."""
+        number of rewritten slice partitions.
+
+        ``max_cutoff_ms`` bounds the slices that can hold expiring rows
+        (at least ``default_cutoff_ms`` and every row's ``cutoff_ms``);
+        callers that already know it pass it in and save one aggregate
+        job over ``cutoffs``.  With it, a type whose slices all start at
+        or after the bound costs listings only, no Spark job."""
         self._assert_not_pinned("apply_row_retention")
-        if self.manifest is not None:
+        if max_cutoff_ms is None:
             max_cutoff_row = cutoffs.agg(F.max("cutoff_ms")).collect()[0][0]
-            max_cutoff = max(default_cutoff_ms, max_cutoff_row or 0)
+            max_cutoff_ms = max(default_cutoff_ms, max_cutoff_row or 0)
+        if self.manifest is not None:
 
             def keep(df: DataFrame) -> DataFrame:
                 return df.join(
@@ -1165,13 +1210,13 @@ class MetricsStore:
             for layer in _LAYERS:
                 rewritten += len(
                     self._rewrite_slices_manifest(
-                        metric_type, layer, (0, max_cutoff), keep
+                        metric_type, layer, (0, max_cutoff_ms), keep
                     )
                 )
             return rewritten
         with self._maintenance_lock():
             return self._apply_row_retention_locked(
-                metric_type, cutoffs, default_cutoff_ms
+                metric_type, cutoffs, default_cutoff_ms, max_cutoff_ms
             )
 
     def _rewrite_slices_manifest(
@@ -1205,16 +1250,7 @@ class MetricsStore:
             out_slices = {p[0] for p in pairs}
             seg = self._publish_segment(staging, root, pairs)
         else:
-            (
-                kept.withColumn("_ds", F.col("date_slice"))
-                .withColumn("_tb", F.col("tenant_bucket"))
-                .repartition("_ds", "_tb")
-                .sortWithinPartitions("metric", "ts")
-                .write.mode("overwrite")
-                .option("compression", "zstd")
-                .partitionBy("_ds", "_tb")
-                .parquet(str(staging))
-            )
+            self._write_cold(kept, staging)
             out_slices = {
                 int(p.name.split("=", 1)[1]) for p in staging.glob("_ds=*")
             }
@@ -1267,10 +1303,8 @@ class MetricsStore:
         metric_type: str,
         cutoffs: DataFrame,
         default_cutoff_ms: int,
+        max_cutoff: int,
     ) -> int:
-        max_cutoff_row = cutoffs.agg(F.max("cutoff_ms")).collect()[0][0]
-        max_cutoff = max(default_cutoff_ms, max_cutoff_row or 0)
-
         def keep(df: DataFrame) -> DataFrame:
             return (
                 df.join(F.broadcast(cutoffs), ["tenant_id", "metric"], "left")
@@ -1319,9 +1353,7 @@ class MetricsStore:
                 )
                 kept = keep(df)
                 staging = self.base / "_staging" / f"ret_{metric_type}_cold"
-                kept.write.mode("overwrite").option(
-                    "compression", "zstd"
-                ).partitionBy("date_slice", "tenant_bucket").parquet(str(staging))
+                self._write_cold(kept, staging)
                 for slice_start in affected:
                     dst = root / f"date_slice={slice_start}"
                     src = staging / f"date_slice={slice_start}"
@@ -1426,9 +1458,7 @@ class MetricsStore:
                 "ingest_seq", "date_slice", "tenant_bucket",
             )
             staging = self.base / "_staging" / f"del_{metric_type}_cold"
-            kept.write.mode("overwrite").partitionBy(
-                "date_slice", "tenant_bucket"
-            ).parquet(str(staging))
+            self._write_cold(kept, staging)
             for m in matches:
                 shutil.rmtree(m)
             for sdir in Path(staging).glob(
@@ -1438,6 +1468,9 @@ class MetricsStore:
                 dst.parent.mkdir(parents=True, exist_ok=True)
                 shutil.move(str(sdir), str(dst))
             shutil.rmtree(staging, ignore_errors=True)
+            # the moves above change only date_slice dirs: bump the
+            # layer root so cold plan caches and state tokens see them
+            self._bump_mtimes(root)
         # definitions
         idx = self.metrics_idx()
         if idx is not None:
@@ -1547,9 +1580,7 @@ class MetricsStore:
             "ingest_seq", "date_slice", "tenant_bucket",
         )
         staging = self.base / "_staging" / f"delm_{metric_type}_cold"
-        kept.write.mode("overwrite").option("compression", "zstd").partitionBy(
-            "date_slice", "tenant_bucket"
-        ).parquet(str(staging))
+        self._write_cold(kept, staging)
         for slice_start in affected:
             part = f"date_slice={slice_start}/tenant_bucket={bucket}"
             src, dst = staging / part, root / part
@@ -1565,30 +1596,58 @@ class MetricsStore:
 
     # -- definition tables (metrics_idx / tenants) ---------------------------
 
-    def _table_read(self, key: str, schema=None) -> DataFrame | None:
-        """Manifest-aware read of a versioned side table."""
+    def _table_path(self, key: str) -> Path | None:
+        """Directory of the current version of a side table, or None."""
         if self.manifest is not None:
             vdir = self._read_snap().get("tables", {}).get(key)
-            if vdir is None:
-                return None
-            path = self.base / key / vdir
-        else:
-            path = self.base / key
-            if not path.exists():
-                return None
+            return None if vdir is None else self.base / key / vdir
+        path = self.base / key
+        return path if path.exists() else None
+
+    def _table_read(self, key: str, schema=None) -> DataFrame | None:
+        """Manifest-aware read of a versioned side table."""
+        path = self._table_path(key)
+        if path is None:
+            return None
         reader = self.spark.read
         if schema is not None:
             reader = reader.schema(schema)
         return reader.parquet(str(path))
 
-    def _table_save(self, key: str, df: DataFrame) -> None:
+    def _table_state(self, key: str) -> dict | None:
+        """The ``TABLE_STATE`` sidecar of a side table's current version
+        (rows written, source token), or None."""
+        path = self._table_path(key)
+        if path is None:
+            return None
+        try:
+            return json.loads((path / TABLE_STATE).read_text())
+        except (OSError, ValueError):  # written before this sidecar existed
+            return None
+
+    def _table_save(self, key: str, df: DataFrame, token=None) -> int:
         """Manifest-aware overwrite of a versioned side table (new
         immutable version dir + CAS pointer swap; rename mode keeps the
-        two-rename publish)."""
+        two-rename publish).  Rows are counted in the write job itself
+        (``Dataset.observe``, no re-read) and recorded, with ``token``,
+        in the version's ``TABLE_STATE`` sidecar.  Returns the row
+        count."""
         self._assert_not_pinned("table save")
+        obs = Observation()
+        staging = self.base / "_staging" / (
+            new_id("tbl") if self.manifest is not None else key.replace("/", "_")
+        )
+        (
+            df.coalesce(1)
+            .observe(obs, F.count(F.lit(1)).alias("rows"))
+            .write.mode("overwrite")
+            .parquet(str(staging))
+        )
+        rows = int(obs.get["rows"])
+        (staging / TABLE_STATE).write_text(
+            json.dumps({"rows": rows, "token": token})
+        )
         if self.manifest is not None:
-            staging = self.base / "_staging" / new_id("tbl")
-            df.coalesce(1).write.mode("overwrite").parquet(str(staging))
             vdir = new_id("v")
             dst = self.base / key / vdir
             dst.parent.mkdir(parents=True, exist_ok=True)
@@ -1599,10 +1658,27 @@ class MetricsStore:
                 return state
 
             self.manifest.commit(mutate)
-            return
-        staging = self.base / "_staging" / key.replace("/", "_")
-        df.coalesce(1).write.mode("overwrite").parquet(str(staging))
+            return rows
         self._swap_in(staging, self.base / key)
+        return rows
+
+    def definitions_token(self):
+        """Token that changes whenever ``metrics_idx`` or ``tenants``
+        changes — for callers that cache what they derived from the
+        definitions.  Each save writes a new version dir (manifest) or
+        new part files named by a per-job UUID (rename): one listing."""
+        out = []
+        for key in ("metrics_idx", "tenants"):
+            path = self._table_path(key)
+            try:
+                out.append(
+                    None if path is None
+                    else (str(path), tuple(sorted(os.listdir(path))))
+                )
+            except FileNotFoundError:
+                # a rename-mode swap in flight: a token nothing matches
+                out.append(new_id("swap"))
+        return tuple(out)
 
     def metrics_idx(self) -> DataFrame | None:
         return self._table_read("metrics_idx", METRICS_IDX_SCHEMA)
@@ -1642,21 +1718,26 @@ class MetricsStore:
             .agg(F.max("ts").alias("last_write_ts"))
         )
 
-    def refresh_expiration_index(self, metric_type: str) -> int:
+    def refresh_expiration_index(self, metric_type: str) -> dict:
         """Persist a snapshot of :meth:`expiration_index` (the reference
         maintains metrics_expiration_idx as a table; here the maintenance
         pass materializes it so expiration queries don't rescan points).
-        Returns the row count of the refreshed snapshot."""
-        df = self.expiration_index(metric_type)
+
+        The snapshot records the type's :meth:`state_token`, read before
+        the points are: while the token on disk still matches, the
+        snapshot is exact and the rewrite is skipped — an idle or empty
+        type costs a listing, no Spark job, in this process or any
+        other.  Returns ``{"rows": n, "skipped": None | "unchanged"}``,
+        ``n`` being the snapshot's row count (counted on write)."""
+        self._assert_not_pinned("refresh_expiration_index")
         key = f"expiration_idx/{metric_type}"
-        if self.manifest is not None:
-            self._table_save(key, df)
-            return self.expiration_index_snapshot(metric_type).count()
-        staging = self.base / "_staging" / f"expiration_idx_{metric_type}"
-        df.coalesce(1).write.mode("overwrite").parquet(str(staging))
-        target = self.base / "expiration_idx" / metric_type
-        self._swap_in(staging, target)
-        return self.spark.read.parquet(str(target)).count()
+        # JSON round trip: the token as the sidecar holds it
+        token = json.loads(json.dumps(self.state_token(metric_type)))
+        prev = self._table_state(key)
+        if prev is not None and prev.get("token") == token:
+            return {"rows": prev["rows"], "skipped": "unchanged"}
+        rows = self._table_save(key, self.expiration_index(metric_type), token)
+        return {"rows": rows, "skipped": None}
 
     def expiration_index_snapshot(self, metric_type: str) -> DataFrame | None:
         """The last persisted expiration index, or None if maintenance has

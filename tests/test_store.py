@@ -284,3 +284,63 @@ def test_hot_read_raises_after_persistent_path_loss(spark, tmp_path, monkeypatch
     monkeypatch.setattr(store, "_hot_segments", lambda mt: real + [ghost])
     with _pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
         store.points("gauge").count()
+
+
+def test_cold_rewrites_keep_the_cold_layout(spark, store):
+    """Compaction and every cold-slice rewrite (row retention, metric
+    and tenant deletes) write one layout: ZSTD files whose rows are
+    sorted by (metric, ts), so row-group min/max prunes metric and time
+    predicates.  Each rewrite also changes the type's state token."""
+    import random
+
+    import pyarrow.parquet as pq
+
+    # two tenants sharing a bucket, so a file holds both: the LWW
+    # window's (tenant, metric, ts) order is not the layout's order
+    by_bucket: dict = {}
+    for name in (f"t{i}" for i in range(64)):
+        by_bucket.setdefault(store._tenant_bucket_of(name), []).append(name)
+    a, b = next(names for names in by_bucket.values() if len(names) >= 2)[:2]
+    rng = random.Random(7)
+    rows = [
+        ((a, b)[i % 2], f"m{rng.randrange(20)}",
+         SLICE0 + rng.randrange(2 * TWO_HOURS_MS), float(i))
+        for i in range(2000)
+    ]
+    for batch in range(4):
+        store.add_data_points("gauge", _gauge(spark, rows[batch::4]))
+    cold = store._points_path("gauge", "cold")
+    tokens = []
+
+    def check():
+        files = sorted(cold.rglob("*.parquet"))
+        assert files
+        for f in files:
+            pf = pq.ParquetFile(f)
+            keys = [(r["metric"], r["ts"])
+                    for r in pf.read(columns=["metric", "ts"]).to_pylist()]
+            assert keys == sorted(keys), f
+            assert pf.metadata.row_group(0).column(0).compression == "ZSTD"
+        tokens.append(store.state_token("gauge"))
+
+    store.compact("gauge", SLICE0 + 2 * TWO_HOURS_MS)
+    check()
+    cutoffs = spark.createDataFrame(
+        [(a, "m1", SLICE0 + 3_600_000)],
+        "tenant_id string, metric string, cutoff_ms long",
+    )
+    store.apply_row_retention(
+        "gauge", cutoffs, default_cutoff_ms=SLICE0 + 600_000
+    )
+    check()
+    store.delete_metric("gauge", a, "m2", include_cold=True)
+    check()
+    store.delete_tenant(b)
+    check()
+    assert len(set(tokens)) == len(tokens)
+    left = store.points("gauge").collect()
+    assert left and all(
+        r["tenant_id"] == a and r["metric"] != "m2"
+        and r["ts"] >= SLICE0 + (3_600_000 if r["metric"] == "m1" else 600_000)
+        for r in left
+    )
